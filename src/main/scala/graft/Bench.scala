@@ -1,7 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, expr, xxhash64}
+
+import scala.collection.immutable.ListMap
 
 /** Driver benchmark: per-query timings plus the full-build lifecycle twin.
   *
@@ -22,22 +24,10 @@ import org.apache.spark.sql.functions.{col, expr, xxhash64}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Session.cpus
     // memory-backed scratch (shuffle + spill), like BenchScale: this host's
     // disk is ~5x slower than tmpfs; model output still lands on disk
-    val scratch = Scratch.resolve(Scratch.SweepFootprint)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.local.dir", scratch)
-      // same dim-broadcast ceiling as BenchScale: at sf0.1 the pruned dims
-      // are a few MB (broadcast either way), but the conf keeps the bench
-      // plan shape identical to the at-scale build's
-      .config("spark.sql.autoBroadcastJoinThreshold", "256m")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "256m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session(cpus, scratch = Some(Scratch.SweepFootprint))
     // session warmup outside the timed loop: JIT, codegen pipeline, file
     // index + parquet reader init (fixed costs, not query work)
     try spark.read.parquet(s"$sfDir/region.parquet").count()
@@ -57,11 +47,8 @@ object Bench {
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val results = selected.map { case (name, fn) =>
       val t0 = System.nanoTime()
-      try {
-        val df = fn(spark, sfDir)
-        df.select(xxhash64(df.columns.map(col): _*).as("__h"))
-          .agg(expr("bit_xor(__h)")).collect()
-      } catch {
+      try action(fn(spark, sfDir)).collect()
+      catch {
         case e: Throwable =>
           errors(name) = e.getClass.getSimpleName
           System.err.println(s"[bench] $name FAILED: $e")
@@ -72,9 +59,8 @@ object Bench {
     // the watermarked hourly aggregation (Streams.hourlyCounts), AvailableNow
     // trigger -> noop sink; reported as sustained events/second
     if (only.isDefined) {
-      val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
-        .mkString("{", ",", "}")
-      println(s"""{"metric":"subset","queries":$qs,"sf":"$sfDir"}""")
+      println(Json.write(ListMap("metric" -> "subset",
+        "queries" -> ListMap(results.toSeq: _*), "sf" -> sfDir)))
       spark.stop()
       return
     }
@@ -110,7 +96,7 @@ object Bench {
         val t = System.nanoTime()
         spark.read.format("graft-synth")
           .option("table", "lineitem").option("sf", "1")
-          .option("partitions", cpus)
+          .option("partitions", cpus.toLong)
           .load()
           .agg(org.apache.spark.sql.functions.sum(col("l_quantity")))
           .collect()
@@ -174,39 +160,64 @@ object Bench {
       }
     val buildSec = (System.nanoTime() - tb) / 1e9
     rm(new java.io.File(buildDir))
-    // The driver captures only the last ~2 KB of stdout: a JSON line naming
-    // all 84 queries exceeds that and gets truncated at the FRONT, so it
-    // never parses (BENCH_r02 "parsed": null). The LAST line is therefore a
-    // compact one — totals plus the slowest queries up to a hard character
-    // budget — and the full per-query map goes to an earlier stdout line and
-    // to BENCH_DETAIL.json next to the build.
-    def f(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    def f2(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
-    val pageMBps = HostProbe.pageMBps()
-    val total = if (results.nonEmpty) results.values.sum else 0.0
-    val errJson = errors.map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
-      .mkString("{", ",", "}")
-    val fullQs = results.map { case (k, v) => "\"" + k + "\":" + f(v) }
-      .mkString("{", ",", "}")
-    val detail =
-      s"""{"metric":"total","value":${f(total)},"unit":"sec","queries":$fullQs,"errors":$errJson,"sf":"$sfDir","build_all_sec":${f(buildSec)},"build_tables":$built,"stream_events_per_sec":${f(streamRate)},"synth_rows_per_sec":${f(synthRate)},"versioned_rows_per_sec":${f(versionedRate)},"host_page_mbps":$pageMBps}"""
+    val legs = Bench.legs(sfDir, buildSec, built, streamRate, synthRate,
+      versionedRate, HostProbe.pageMBps())
+    val detail = detailLine(results.toSeq, errors, legs)
     println(s"BENCH_DETAIL: $detail")
     try java.nio.file.Files.write(
       java.nio.file.Paths.get("BENCH_DETAIL.json"),
       (detail + "\n").getBytes("UTF-8"))
     catch { case _: Throwable => () }
-    val budget = 1200 // chars for the "queries" object in the compact line
-    val slowestFirst = results.toSeq.sortBy(-_._2)
-    val shown = scala.collection.mutable.ArrayBuffer.empty[String]
-    var used = 0
-    slowestFirst.foreach { case (k, v) =>
-      val entry = "\"" + k + "\":" + f2(v)
-      if (used + entry.length + 1 <= budget) { shown += entry; used += entry.length + 1 }
-    }
-    val compactQs = shown.mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":${f(total)},"unit":"sec","queries":$compactQs,"queries_run":${results.size},"queries_shown":${shown.size},"errors":$errJson,"detail":"BENCH_DETAIL.json","sf":"$sfDir","build_all_sec":${f(buildSec)},"build_tables":$built,"stream_events_per_sec":${f(streamRate)},"synth_rows_per_sec":${f(synthRate)},"versioned_rows_per_sec":${f(versionedRate)},"host_page_mbps":$pageMBps}""")
+    println(lastLine(results.toSeq, errors, legs))
     spark.stop()
+  }
+
+  /** The Bench action, to be collected: bit_xor(xxhash64(all columns)). */
+  def action(df: DataFrame): DataFrame =
+    df.select(xxhash64(df.columns.map(col): _*).as("__h"))
+      .agg(expr("bit_xor(__h)"))
+
+  private def r3(v: Double) = Json.round(v, 3)
+
+  /** The keys after "errors" that both records carry. */
+  def legs(sfDir: String, buildSec: Double, built: Int, streamRate: Double,
+      synthRate: Double, versionedRate: Double, pageMBps: Double)
+      : ListMap[String, Any] = ListMap(
+    "sf" -> sfDir, "build_all_sec" -> r3(buildSec), "build_tables" -> built,
+    "stream_events_per_sec" -> r3(streamRate),
+    "synth_rows_per_sec" -> r3(synthRate),
+    "versioned_rows_per_sec" -> r3(versionedRate),
+    "host_page_mbps" -> pageMBps)
+
+  private def total(results: Seq[(String, Double)]): java.math.BigDecimal =
+    r3(results.map(_._2).sum)
+
+  /** The full record: every query's seconds (stdout's BENCH_DETAIL line and
+    * BENCH_DETAIL.json). */
+  def detailLine(results: Seq[(String, Double)],
+      errors: collection.Map[String, String], legs: ListMap[String, Any]): String =
+    Json.write(ListMap("metric" -> "total", "value" -> total(results),
+      "unit" -> "sec",
+      "queries" -> ListMap(results.map { case (k, v) => k -> r3(v) }: _*),
+      "errors" -> errors) ++ legs)
+
+  /** The last stdout line. Its reader keeps only the last ~2 KB of stdout:
+    * a line naming every query exceeds that and is truncated at the FRONT,
+    * so it never parses (BENCH_r02 "parsed": null). So this line carries
+    * totals plus the slowest queries up to a fixed character budget, and
+    * points at the detail record. */
+  def lastLine(results: Seq[(String, Double)],
+      errors: collection.Map[String, String], legs: ListMap[String, Any]): String = {
+    val budget = 1200 // chars for the "queries" object
+    var used = 0
+    val shown = results.sortBy(-_._2).flatMap { case (k, v) =>
+      val r = Json.round(v, 2)
+      val len = Json.write(k).length + 1 + r.toString.length
+      if (used + len + 1 <= budget) { used += len + 1; Some(k -> r) } else None
+    }
+    Json.write(ListMap("metric" -> "total", "value" -> total(results),
+      "unit" -> "sec", "queries" -> ListMap(shown: _*),
+      "queries_run" -> results.size, "queries_shown" -> shown.size,
+      "errors" -> errors, "detail" -> "BENCH_DETAIL.json") ++ legs)
   }
 }

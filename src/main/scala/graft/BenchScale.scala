@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import scala.collection.immutable.ListMap
+
 /** Scale-up benchmark: replicate the sf0.1 TPC-H tables `copies`× with
   * key-offset blocks into an sf1-equivalent parquet lake, then time a COLD
   * full `Runner.buildAll` — the twin of the reference's published number
@@ -28,7 +30,7 @@ object BenchScale {
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val work = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "/tmp/graft_sf1")
     val copies = sys.env.getOrElse("SPARK_GRAFT_COPIES", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Session.cpus
     val synthSf = sys.env.get("SPARK_GRAFT_SYNTH_SF")
     // Scratch (shuffle files + persist spill) goes to memory-backed storage
     // by default: this host's disk sustains ~0.5 GB/s vs ~2.6 GB/s tmpfs,
@@ -37,45 +39,8 @@ object BenchScale {
     // practice, not a benchmark trick. Model OUTPUT still goes to real disk.
     // (guarded: falls back to disk temp when tmpfs lacks the headroom —
     // see graft.Scratch)
-    val scratch = Scratch.resolve(Scratch.BuildFootprint)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.local.dir", scratch)
-      // long-heap runs GC rarely; shuffle files are reference-cleaned, so
-      // force a periodic sweep to keep tmpfs scratch bounded
-      .config("spark.cleaner.periodicGC.interval", "120s")
-      // start wide, let AQE coalesce: at SF10 a 32-partition fact shuffle
-      // is ~500 MB/task (sort-spill territory); explicit repartition calls
-      // (globalOrder's range exchange) keep their requested count
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        (cpus.toInt * 4).toString)
-      // At SF10 the pruned dims (dim_part ~2M rows, dim_customer ~1.5M) are
-      // 40-200 MB — far over the 10 MB default, so every report's dim join
-      // was a sort-merge join that re-shuffled a 60M-row fact relation. A
-      // 256 MB ceiling broadcasts them (the same call a real cluster makes:
-      // executors holding multi-GB heaps routinely broadcast 100-500 MB
-      // dims) while the 8M-row xrf and fact-fact joins stay shuffle-shaped.
-      .config("spark.sql.autoBroadcastJoinThreshold", "256m")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "256m")
-      // Bound CONCURRENT driver-side broadcast-relation builds: 8 model
-      // writers × multi-GB transient build allocations is the broadcast-OOM
-      // abort shape on drag epochs (the r12/r13 aborts — each 256 MB dim
-      // broadcast transiently allocates ~2 GB building its hash relation).
-      // 4 concurrent builds bounds the transient to ~8 GB regardless of
-      // writer count; queued builds wait on the static exchange pool, not
-      // on memory. (DriverGuard handles the complementary accumulation
-      // vector: dead-broadcast reclamation + admission.)
-      .config("spark.sql.broadcastExchange.maxThreadThreshold", "4")
-      // zstd writes 33% fewer bytes than snappy at equal encode CPU on this
-      // data (tools/CodecProbe.scala: 6.02 -> 4.06 GB on the 60M-row fact,
-      // 9.9-10.4 s either codec against tmpfs) — ~7 GB less write I/O over
-      // the ~22 GB build output, which is exactly the exposure that drags
-      // run tails on degraded-disk epochs.
-      .config("spark.sql.parquet.compression.codec", "zstd")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session(cpus, scratch = Some(Scratch.BuildFootprint),
+      extra = Session.buildConf(cpus))
 
     sys.env.get("SPARK_GRAFT_QUERY_SF").foreach { sf =>
       querySweep(spark, sf, cpus)
@@ -125,7 +90,6 @@ object BenchScale {
       cacheParents = cacheParents)
     val sec = (System.nanoTime() - t0) / 1e9
     val series = sampler.stop()
-    val probeJson = sampler.json(series)
     val midDiskMin = series.map(_.diskMBps).filter(_ > 0)
       .reduceOption(_ min _).getOrElse(-1.0)
     val midShmMin = series.map(_.shmMBps).filter(_ > 0)
@@ -139,9 +103,8 @@ object BenchScale {
     // healthy window across all draws to witness its true pace, where the
     // wall TOTAL needs one unbroken ~9-minute window this host rarely
     // grants (7 r12 attempts, 0 clean).
-    val modelJson = built.sortBy(_.table)
-      .map(b => s""""${b.table}":${math.round(b.seconds * 10.0) / 10.0}""")
-      .mkString("{", ",", "}")
+    val models = ListMap(built.sortBy(_.table)
+      .map(b => b.table -> math.round(b.seconds * 10.0) / 10.0): _*)
     val srcLabel = synthSf.map(sf => s"synth:sf=$sf").getOrElse(src)
     // metric names the workload: synth-fed builds carry their SF; the
     // key-offset replica of the driver's sf0.1 data at x100 IS the
@@ -153,7 +116,15 @@ object BenchScale {
     // on the old name keep matching — rename documented in SCALE.md
     val legacy = synthSf.map(_ => metric).getOrElse(
       if (copies == 10) "build_sf1" else metric)
-    println(s"""{"metric":"$metric","metric_legacy":"$legacy","value":$sec,"unit":"sec","tables":${built.size},"total_rows":$rows,"cpus":$cpus,"threads":$threads,"cache_parents":$cacheParents,"src":"$srcLabel","host_page_mbps":${HostProbe.pageMBps()},"probe_series":$probeJson,"probe_series_cols":["offset_sec","disk_mbps","shm_mbps"],"probe_mid_min_disk":$midDiskMin,"probe_mid_min_shm":$midShmMin,"models":$modelJson}""")
+    println(Json.write(ListMap("metric" -> metric, "metric_legacy" -> legacy,
+      "value" -> sec, "unit" -> "sec", "tables" -> built.size,
+      "total_rows" -> rows, "cpus" -> cpus, "threads" -> threads,
+      "cache_parents" -> cacheParents, "src" -> srcLabel,
+      "host_page_mbps" -> HostProbe.pageMBps(),
+      "probe_series" -> series.map(s => Seq(s.offsetSec, s.diskMBps, s.shmMBps)),
+      "probe_series_cols" -> Seq("offset_sec", "disk_mbps", "shm_mbps"),
+      "probe_mid_min_disk" -> midDiskMin, "probe_mid_min_shm" -> midShmMin,
+      "models" -> models)))
     spark.stop()
   }
 
@@ -168,7 +139,7 @@ object BenchScale {
     *
     * Each leg collect()s a handful of result rows (6 / ~84 / 25 / 5 / 1);
     * nothing driver-side scales with SF. */
-  private def querySweep(spark: SparkSession, sf: String, cpus: String): Unit = {
+  private def querySweep(spark: SparkSession, sf: String, cpus: Int): Unit = {
     val ctx = Ctx(spark, s"synth:sf=$sf")
     def timed(name: String)(df: => DataFrame): (String, Double, Long) = {
       val t0 = System.nanoTime()
@@ -216,9 +187,8 @@ object BenchScale {
         ord.agg(approx_count_distinct("o_custkey").as("n_customers"),
           count(lit(1)).as("n_orders"))
       })
-    val total = legs.map(_._2).sum
-    val qJson = legs.map { case (n, s, _) => s""""$n":$s""" }.mkString(",")
-    println(s"""{"metric":"query_sf$sf","value":$total,"unit":"sec","queries":{$qJson},"sf":$sf,"cpus":$cpus,"host_page_mbps":${HostProbe.pageMBps()}}""")
+    println(sweepLine(s"query_sf$sf", legs.map(_._2).sum,
+      legs.map { case (n, s, _) => n -> s }, sf, cpus))
   }
 
   /** Training-pipeline scale sweep (`SPARK_GRAFT_PIPE_SF=<N>`): the LLM
@@ -231,7 +201,7 @@ object BenchScale {
     * hashes — every output column computed, nothing driver-side scales
     * with SF). Legs run the REGISTRY entries, so what's measured is the
     * shipped plan, not a bench re-implementation. */
-  private def pipeSweep(spark: SparkSession, sf: String, cpus: String): Unit = {
+  private def pipeSweep(spark: SparkSession, sf: String, cpus: Int): Unit = {
     val dir = s"synth:sf=$sf"
     val legs = Seq(
       "dedup_exact",        // md5 groupBy, one shuffle
@@ -265,9 +235,7 @@ object BenchScale {
     Store.clear(spark)
     val results = legs.map { name =>
       val t0 = System.nanoTime()
-      val df = Registry.queries(name)(spark, dir)
-      df.select(xxhash64(df.columns.map(col): _*).as("__h"))
-        .agg(expr("bit_xor(__h)")).collect()
+      Bench.action(Registry.queries(name)(spark, dir)).collect()
       val sec = (System.nanoTime() - t0) / 1e9
       System.err.println(f"[benchscale] pipe:$name%-22s $sec%8.1f s")
       // per-leg isolation: each leg pays its own memo builds (it already
@@ -277,9 +245,7 @@ object BenchScale {
       Store.clear(spark)
       name -> sec
     }
-    val total = results.map(_._2).sum
-    val qJson = results.map { case (n, s) => s""""$n":$s""" }.mkString(",")
-    println(s"""{"metric":"pipe_sf$sf","value":$total,"unit":"sec","queries":{$qJson},"sf":$sf,"cpus":$cpus,"host_page_mbps":${HostProbe.pageMBps()}}""")
+    println(sweepLine(s"pipe_sf$sf", results.map(_._2).sum, results, sf, cpus))
   }
 
   /** Skew-stress sweep (`SPARK_GRAFT_SKEW_SF=<N>`): the same shuffle join
@@ -297,10 +263,10 @@ object BenchScale {
     * three checksums agree (a mitigation that changes answers is not a
     * mitigation) and emits per-leg seconds. The dim side is 4M rows so the
     * join is honestly shuffle-shaped (no broadcast escape hatch). */
-  private def skewSweep(spark: SparkSession, sf: String, cpus: String): Unit = {
+  private def skewSweep(spark: SparkSession, sf: String, cpus: Int): Unit = {
     val li = spark.read.format("graft-synth")
       .option("table", "lineitem").option("sf", sf)
-      .option("partitions", cpus).load()
+      .option("partitions", cpus.toLong).load()
     val dimN = 4000000L
     // 30% of rows -> key 0; the rest uniform over the dim's key space.
     // Row-hash based, so the assignment is deterministic and re-runnable.
@@ -345,10 +311,20 @@ object BenchScale {
     }
     val consistent = plain._3 == aqe._3 && aqe._3 == salted._3
     require(consistent, "skew sweep legs disagree on the join result")
-    val qJson = Seq(plain, aqe, salted)
-      .map { case (n, s, _) => s""""$n":$s""" }.mkString(",")
-    println(s"""{"metric":"skew_sf$sf","value":${aqe._2},"unit":"sec","queries":{$qJson},"match":$consistent,"sf":$sf,"cpus":$cpus,"host_page_mbps":${HostProbe.pageMBps()}}""")
+    println(sweepLine(s"skew_sf$sf", aqe._2,
+      Seq(plain, aqe, salted).map { case (n, s, _) => n -> s }, sf, cpus,
+      "match" -> consistent))
   }
+
+  /** One sweep's record: per-leg seconds, with `sf` written as the number
+    * it was given. `flags` go between the legs and `sf`. */
+  private def sweepLine(metric: String, value: Double,
+      legs: Seq[(String, Double)], sf: String, cpus: Int,
+      flags: (String, Any)*): String =
+    Json.write(ListMap("metric" -> metric, "value" -> value, "unit" -> "sec",
+      "queries" -> ListMap(legs: _*)) ++ flags ++ ListMap(
+      "sf" -> new java.math.BigDecimal(sf), "cpus" -> cpus,
+      "host_page_mbps" -> HostProbe.pageMBps()))
 
   /** Key-offset replication of the 8 TPC-H tables. */
   private def replicate(spark: SparkSession, src: String, work: String,

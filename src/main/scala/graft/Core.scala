@@ -65,19 +65,18 @@ object Ctx {
     * sees the encoding. The DuckDB oracle twins use `epoch_ns(ts)` /
     * `epoch(ts)`, which are the same normalization on the oracle side.
     *
-    * Session timezone is pinned UTC before the NTZ->instant cast: a naive
-    * parquet timestamp must be interpreted as UTC wall-clock to land on the
+    * Both confs this needs come from graft.Session and are required here,
+    * not set: `parquet.nanosAsLong` must hold BEFORE the read resolves the
+    * footer schema, and the UTC session time zone makes the NTZ->instant
+    * cast read a naive parquet timestamp as UTC wall-clock, landing on the
     * same epoch integers DuckDB derives. TestdataSchemaSpec guards this
     * contract against the next drift. */
   def normalizedEvents(spark: SparkSession, path: String): DataFrame = {
-    // must be set BEFORE the read resolves the footer schema; harmless
-    // (unread) for non-NANOS files
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    Session.requireEventsConf(spark)
     val df = spark.read.parquet(path)
     df.schema("ts").dataType match {
       case LongType => df // TIMESTAMP(NANOS) read as the raw nano count
       case TimestampNTZType | TimestampType =>
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
         df.withColumn("ts",
           unix_micros(col("ts").cast(TimestampType)) * lit(1000L))
       case other =>

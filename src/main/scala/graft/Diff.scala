@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.collection.immutable.ListMap
 
 /** CLI for [[Runner.diff]] — the recce regression twin, driveable end to
   * end: diff two build directories table by table and emit one JSON line
@@ -15,28 +15,20 @@ import org.apache.spark.sql.SparkSession
 object Diff {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: graft.Diff <dirA> <dirB> [table=key+key ...]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     val keys = args.drop(2).map { kv =>
       val Array(t, ks) = kv.split("=", 2)
       t -> ks.split("\\+").toSeq
     }.toMap
     val diffs = Runner.diff(spark, args(0), args(1), keys)
     diffs.foreach { d =>
-      println(
-        s"""{"table":"${d.table}","only_in_a":${d.onlyInA},"only_in_b":${d.onlyInB},""" +
-        s""""rows_a":${d.rowsA},"rows_b":${d.rowsB},"schema_changed":${d.schemaChanged}""" +
-        d.changedKeys.map(c => s""","changed_keys":$c""").getOrElse("") + "}")
+      println(Json.write(ListMap("table" -> d.table, "only_in_a" -> d.onlyInA,
+        "only_in_b" -> d.onlyInB, "rows_a" -> d.rowsA, "rows_b" -> d.rowsB,
+        "schema_changed" -> d.schemaChanged) ++ d.changedKeys.map("changed_keys" -> _)))
     }
     val dirty = diffs.filterNot(_.identical)
-    println(
-      s"""{"metric":"diff","tables":${diffs.size},"differing":${dirty.size},""" +
-      s""""identical":${dirty.isEmpty}}""")
+    println(Json.write(ListMap("metric" -> "diff", "tables" -> diffs.size,
+      "differing" -> dirty.size, "identical" -> dirty.isEmpty)))
     spark.stop()
     if (dirty.nonEmpty) sys.exit(1)
   }

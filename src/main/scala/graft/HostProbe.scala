@@ -108,9 +108,5 @@ object HostProbe {
       catch { case _: Exception => Sample(offset, -1.0, -1.0) }
       buf.synchronized { (buf += fin).toSeq }
     }
-
-    def json(samples: Seq[Sample]): String = samples
-      .map(s => s"[${s.offsetSec},${s.diskMBps},${s.shmMBps}]")
-      .mkString("[", ",", "]")
   }
 }

@@ -52,7 +52,7 @@ import org.apache.spark.sql.functions._
   * 3-6× the packed cost — PERF_NOTES_r10.md §3) and the `aggregate()`
   * higher-order fold (CodegenFallback: interpreted per-row eval, 2.6-3×
   * the unrolled sum at 900k candidates regardless of element type —
-  * tools/AnnServeProbe, PERF_NOTES_r11.md). The unrolled sum adds the
+  * PERF_NOTES_r11.md). The unrolled sum adds the
   * SAME eight decimal(12,9) values the original per-subspace sum() added
   * — decimal addition is exact and order-free, so the output is
   * bit-identical (AnnIndexSpec pins row-identity with annIvfPq).
@@ -76,8 +76,8 @@ object AnnIndex {
     * generator 1-based dense — so any `vec_id < n` / `<= n` rule publishes
     * a different cell count per corpus (the r11 off-by-one scar was this
     * wart surfacing on the synth side). The rank rule publishes exactly
-    * the parameterized shape on ANY id set; AnnIndexBench's
-    * `cells_actual` confirms it per artifact. A production build passes
+    * the parameterized shape on ANY id set; `cells_actual` in
+    * BENCH_ANN.json confirms it. A production build passes
     * ~sqrt(N) cells and 256 codewords. The defaults (8 cells / 16
     * codewords) are the [[Similarity.annIvfPq]] verification shape —
     * annIvfPq/annIvf fix their quantizers as the testdata seed sets
@@ -501,9 +501,9 @@ object AnnIndex {
     // Unrolled, not an aggregate() fold: higher-order functions are
     // CodegenFallback, and the interpreted per-row eval measured 2.6-3x
     // the cost of this whole-stage-codegen'd sum at 900k candidates
-    // (tools/AnnServeProbe: 8.2 s HOF-decimal vs 2.8-3.6 s unrolled; a
+    // (PERF_NOTES_r11.md: 8.2 s HOF-decimal vs 2.8-3.6 s unrolled; a
     // double-typed fold read 7.8 s, proving the tax is the HOF fallback,
-    // not decimal arithmetic — PERF_NOTES_r11.md)
+    // not decimal arithmetic)
     val adcSum = (0 until 8)
       .map(s => s"element_at(qarr, CAST($s * $nSlots + " +
         s"element_at(codes, ${s + 1}) + 1 AS INT))")

@@ -74,7 +74,7 @@ object Text {
         // collect_set straight off the raw pairs: ONE doc-keyed shuffle,
         // with the dedup happening inside the map-side partial sets — the
         // distinct + collect_list form paid a second full pair-sized
-        // exchange for nothing (4x at SF10, tools/ShingleAb; consumers are
+        // exchange for nothing (4x at SF10, PERF_NOTES_r8.md; consumers are
         // order-insensitive: mins / sizes / intersect-size / re-explodes)
         shinglePairs(ctx).groupBy("doc_id")
           // serialized storage: wide string-array rows deserialized are
@@ -311,7 +311,7 @@ object Text {
   private[graft] def minhash16(docArr: DataFrame): DataFrame = {
     // native one-pass expression (functions.MinHashSig16) — the composed
     // transform/array_min form costs ~3x the digest work in array-pass
-    // overhead (measured in tools/MinhashSigAb); value-identical
+    // overhead (PERF_NOTES_r8.md); value-identical
     graft.functions.MinHashSig16.register(docArr.sparkSession)
     docArr.withColumn("hs", expr("minhash16_sig(shingles)"))
       .select(col("doc_id") +: (0 until 16).map(i =>
@@ -578,7 +578,7 @@ object Text {
     * d(X,Y) ≤ 2), so there is no far-candidate verification mass at all.
     * This replaced the r7 chunk-pigeonhole join whose (chunk_idx,
     * chunk_val) buckets went quadratic on template-concentrated corpora:
-    * measured with `tools/SimhashProbe` at synth SF100 (5M docs), 63 953
+    * measured at synth SF100 (5M docs, PERF_NOTES_r8.md), 63 953
     * docs shared one 21-bit chunk and candidate mass was 38.4B pairs
     * (one reduce task burned 24 min before the leg was killed) vs a true
     * output floor of ~1M pairs. Flip expansion is 65 rows per DISTINCT
@@ -659,7 +659,7 @@ object Text {
             expr("lo ^ shiftleft(1L, 64 - j)")).otherwise(col("lo")).as("vlo"),
           col("hi"), col("lo"))
       // Self-join kept over a groupBy-bucket formulation after measuring:
-      // tools/SimhashJoinAb at SF100 reads 43.2-44.5 s (join) vs
+      // at SF100 (PERF_NOTES_r8.md) it reads 43.2-44.5 s (join) vs
       // 41.0-47.4 s (radius-1-ball buckets + bounded double explode),
       // identical pair sets — Spark reuses the variant exchange across
       // the self-join sides, so the "second shuffle" the bucket form
@@ -1393,7 +1393,7 @@ object Text {
     *    one-row relation and the candidate filter a broadcast semi join);
     *  - [[heavyHittersEager]] runs pass 1 as a scalar action at
     *    construction and filters with an InSet predicate — 3.5-4x cheaper
-    *    per token row (tools/HeavyHittersAb), for callers that time
+    *    per token row (PERF_NOTES_r10.md §2), for callers that time
     *    construction+action together.
     * The recount's exchange stays bounded by the ≤cap matched groups
     * either way; the sketch's order-invariance (FreqItemsSpec) keeps both
@@ -1405,7 +1405,7 @@ object Text {
     // whole pipeline is a lazy plan: no job runs until the consumer acts
     // (HeavyHittersLazySpec pins zero-jobs-at-construction). The candidate
     // filter is then a broadcast semi join — per-token it measures 3.5-4x
-    // the InSet predicate's cost (tools/HeavyHittersAb, PERF_NOTES_r10 §2),
+    // the InSet predicate's cost (PERF_NOTES_r10.md §2),
     // which is why the eager variant exists; this is the default because a
     // plan that runs jobs at CONSTRUCTION time under-measures in any
     // consumer that builds plans outside its timed window (the r11 scar).
@@ -1428,7 +1428,7 @@ object Text {
     * CONSTRUCTION, and pass 2 filters with the collected candidates as an
     * InSet predicate — measured 3.5-4x cheaper per token row than the lazy
     * semi-join form doing identical work (17-22 s vs ~5 s on 248M tokens
-    * at SF100; tools/HeavyHittersAb). Same output, same guarantee. The
+    * at SF100; PERF_NOTES_r10.md §2). Same output, same guarantee. The
     * eagerness is in the NAME: callers timing this must start their clock
     * before construction (the Registry bench/verify paths do). */
   def heavyHittersEager(ctx: Ctx, denom: Int = 500, cap: Int = 8192): DataFrame = {

@@ -25,15 +25,15 @@ object Streams {
     * 1000)`, a native timestamp (NTZ or instant) casts through
     * TimestampType under a UTC session — so a testdata re-generation can
     * change the parquet encoding without touching any stream consumer
-    * (Bench's throughput leg, StreamRateFloorSpec). */
+    * (Bench's throughput leg, StreamRateFloorSpec). Requires graft.Session's
+    * events confs, as [[graft.Ctx.normalizedEvents]] does. */
   def eventFileStream(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    graft.Session.requireEventsConf(spark)
     val schema = spark.read.parquet(s"$sfDir/events.parquet").schema
     val tsCol = schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         timestamp_micros(expr("ts div 1000"))
       case _ =>
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
         col("ts").cast("timestamp")
     }
     // the file stream source needs a directory: glob-filter the sf dir

@@ -1,8 +1,9 @@
 package graft.tools
 
+import com.fasterxml.jackson.databind.JsonNode
 import graft._
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
+
+import scala.collection.immutable.ListMap
 
 /** Isolated-draw measurement protocol as ONE command — the discipline that
   * produced BENCH_SIMHASH_STATS.json (r9), captured as a tool instead of a
@@ -45,44 +46,31 @@ object DrawSweep {
   /** Session conf mirrors BenchScale's sweep path (the conditions the
     * committed sweep artifacts were measured under). */
   private def childDraw(leg: String, sfDir: String): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_DRAW_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.local.dir", Scratch.resolve(Scratch.SweepFootprint))
-      .config("spark.cleaner.periodicGC.interval", "120s")
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        (cpus.toInt * 4).toString)
-      .config("spark.sql.autoBroadcastJoinThreshold", "256m")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "256m")
-      .config("spark.sql.parquet.compression.codec", "zstd")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_DRAW_CPUS", "32").toInt
+    val spark = Session(cpus, scratch = Some(Scratch.SweepFootprint),
+      extra = Session.buildConf(cpus))
     Store.clear(spark)
     def time(name: String): Double = {
       val t0 = System.nanoTime()
-      val df = Registry.queries(name)(spark, sfDir)
-      df.select(xxhash64(df.columns.map(col): _*).as("__h"))
-        .agg(expr("bit_xor(__h)")).collect()
+      Bench.action(Registry.queries(name)(spark, sfDir)).collect()
       (System.nanoTime() - t0) / 1e9
     }
-    if (leg == "_suite") {
+    val record = if (leg == "_suite") {
       // the driver-bench query loop: one warm session, every Registry
       // entry in name order, memoized fragments shared exactly as the
       // driver's own Bench run shares them
       try spark.read.parquet(s"$sfDir/region.parquet").count()
       catch { case _: Throwable => () }
       val per = Registry.queries.keys.toSeq.sorted.map(n => n -> time(n))
-      val total = per.map(_._2).sum
-      val qJson = per.map { case (n, s) => s""""$n":$s""" }.mkString("{", ",", "}")
       spark.stop()
-      println(s"""{"leg":"_suite","value":$total,"host_page_mbps":${HostProbe.pageMBps()},"queries":$qJson}""")
+      ListMap("leg" -> leg, "value" -> per.map(_._2).sum,
+        "host_page_mbps" -> HostProbe.pageMBps(), "queries" -> ListMap(per: _*))
     } else {
       val sec = time(leg)
       spark.stop()
-      println(s"""{"leg":"$leg","value":$sec,"host_page_mbps":${HostProbe.pageMBps()}}""")
+      ListMap("leg" -> leg, "value" -> sec, "host_page_mbps" -> HostProbe.pageMBps())
     }
+    println(Json.write(record))
   }
 
   // ---- parent: fork n isolated children per leg, aggregate ---------------
@@ -98,12 +86,11 @@ object DrawSweep {
     "java.base/sun.security.action", "java.base/sun.util.calendar"
   ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
 
-  /** Forks one child draw; returns its JSON line. */
-  private def runChild(leg: String, sfDir: String, heap: String): String = {
+  /** Forks one child draw; returns its record. */
+  private def runChild(leg: String, sfDir: String, heap: String): JsonNode = {
     val java = s"${sys.props("java.home")}/bin/java"
     val cmd: Seq[String] = Seq(java) ++ addOpens ++ Seq(
       s"-Xms$heap", s"-Xmx$heap", "-XX:+AlwaysPreTouch",
-      "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
       "-cp", sys.props("java.class.path"),
       "graft.tools.DrawSweep", "--one", leg, sfDir)
     val pb = new ProcessBuilder(cmd: _*)
@@ -117,12 +104,7 @@ object DrawSweep {
         s"draw child for $leg exited $exit without a JSON line; " +
           s"last output: ${out.takeRight(5).mkString(" | ")}"))
     require(exit == 0, s"draw child for $leg exited $exit")
-    line
-  }
-
-  private def field(line: String, k: String): Double = {
-    val m = s""""$k":([0-9.Ee+-]+)""".r.findFirstMatchIn(line)
-    m.map(_.group(1).toDouble).getOrElse(sys.error(s"no $k in: $line"))
+    Json.read(line)
   }
 
   /** True median: mean of the two middle elements for even n (the old
@@ -150,36 +132,30 @@ object DrawSweep {
 
     val perLeg = legs.map { leg =>
       val draws = (1 to n).map { i =>
-        val line = runChild(leg, sfDir, heap)
-        val (sec, probe) = (field(line, "value"), field(line, "host_page_mbps"))
+        val rec = runChild(leg, sfDir, heap)
+        val (sec, probe) = (rec.get("value").asDouble, rec.get("host_page_mbps").asDouble)
         System.err.println(f"[drawsweep] $leg draw $i/$n: $sec%8.1f s (probe $probe%.0f)")
-        (sec, probe, line)
+        (sec, probe, rec)
       }
       val vs = draws.map(_._1)
       // half-spread: (max-min)/(max+min) — the ±pct the artifact quotes
       val spread = math.round((vs.max - vs.min) / (vs.max + vs.min) * 1000.0) / 10.0
-      val drawsJson = draws
-        .map { case (v, p, _) => s"""{"value":$v,"host_page_mbps":$p}""" }
-        .mkString("[", ",", "]")
       // suite mode: fold the per-draw query maps into a per-query MINIMUM
       // (the BENCH_MIN statistic — min is the faithful per-query cost
       // estimate under one-sided host-stall noise)
-      val qMinJson = if (leg != "_suite") "" else {
-        val maps = draws.map { case (_, _, line) =>
-          val obj = """"queries"\s*:\s*\{([^}]*)\}""".r
-            .findFirstMatchIn(line).map(_.group(1))
-            .getOrElse(sys.error(s"suite child line has no queries object"))
-          """"([^"]+)"\s*:\s*([0-9.eE+-]+)""".r.findAllMatchIn(obj)
-            .map(m => m.group(1) -> m.group(2).toDouble).toMap
-        }
-        val keys = maps.head.keys.toSeq.sorted
-        val mins = keys.map(k => s""""$k":${maps.map(_(k)).min}""").mkString(",")
-        s""","queries_min":{$mins}"""
+      val qMin = if (leg != "_suite") ListMap.empty[String, Any] else {
+        val maps = draws.map { case (_, _, rec) => Json.numbers(rec.get("queries")) }
+        ListMap("queries_min" -> ListMap(maps.head.keys.toSeq.sorted
+          .map(k => k -> maps.map(_(k)).min): _*))
       }
-      leg ->
-        s"""{"draws":$drawsJson,"n":$n,"min":${vs.min},"median":${median(vs)},"spread_pct":$spread$qMinJson}"""
+      leg -> (ListMap("draws" -> draws.map { case (v, p, _) =>
+          ListMap("value" -> v, "host_page_mbps" -> p) },
+        "n" -> n, "min" -> vs.min, "median" -> median(vs),
+        "spread_pct" -> spread) ++ qMin)
     }
-    val legsJson = perLeg.map { case (l, j) => s""""$l":$j""" }.mkString(",")
-    println(s"""{"metric":"isolated_draws","unit":"sec","sf":"$sfDir","cpus":$cpus,"heap":"$heap","protocol":"n consecutive draws, each its own fresh JVM (Xms=Xmx=$heap, pretouch), sweep session conf, per-draw end probe; spread_pct=(max-min)/(max+min)*100; median=mean of middle two for even n","legs":{$legsJson}}""")
+    println(Json.write(ListMap("metric" -> "isolated_draws", "unit" -> "sec",
+      "sf" -> sfDir, "cpus" -> cpus.toInt, "heap" -> heap,
+      "protocol" -> s"n consecutive draws, each its own fresh JVM (Xms=Xmx=$heap, pretouch), sweep session conf, per-draw end probe; spread_pct=(max-min)/(max+min)*100; median=mean of middle two for even n",
+      "legs" -> ListMap(perLeg: _*))))
   }
 }

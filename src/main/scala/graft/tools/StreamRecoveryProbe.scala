@@ -1,8 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+
+import scala.collection.immutable.ListMap
 
 /** Restart-from-checkpoint probe for the stateful streaming path — the
   * operational question the steady-state RocksDB record
@@ -42,19 +43,12 @@ object StreamRecoveryProbe {
   def main(args: Array[String]): Unit = {
     val sfs = sys.env.getOrElse("SPARK_GRAFT_RECOVERY_SFS", "2,10")
       .split(",").map(_.trim).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+    val cpus = graft.Session.cpus
     val usersX = sys.env.getOrElse("SPARK_GRAFT_RECOVERY_USERS_X", "1").toLong
     val base = sys.env.getOrElse("SPARK_GRAFT_RECOVERY_DIR", "/tmp/graft_stream_recovery")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.local.dir", graft.Scratch.resolve(graft.Scratch.SweepFootprint))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session(cpus, scratch = Some(graft.Scratch.SweepFootprint),
+      extra = Map("spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))
     import spark.implicits._
 
     def rmTree(f: java.io.File): Unit = {
@@ -69,7 +63,7 @@ object StreamRecoveryProbe {
       val staging = s"$work/staging"
       spark.read.format("graft-synth")
         .option("table", "events").option("sf", sf)
-        .option("partitions", cpus)
+        .option("partitions", cpus.toLong)
         .load()
         .select(col("event_id"), timestamp_micros(expr("ts div 1000")).as("ts"),
           (col("user_id") * usersX + pmod(col("event_id"), lit(usersX)))
@@ -173,15 +167,20 @@ object StreamRecoveryProbe {
       System.err.println(f"[recovery] sf=$sf events=$nEvents state_rows=$bRows " +
         f"restoreA_ms=$aFirstMs restartB_ms=$bFirstMs catchup=$bSec%.1fs " +
         f"catchup_ev_s=$catchupDrainRate%.0f steady_ev_s=$steadyRate%.0f exactly_once=OK")
-      s"""{"sf":$sf,"events":$nEvents,"state_rows_at_restart":$aRows,"state_rows_final":$bRows,""" +
-        s""""phase_a_sec":$aSec,"first_batch_cold_ms":$aFirstMs,""" +
-        s""""restart_catchup_sec":$bSec,"first_batch_restored_ms":$bFirstMs,""" +
-        s""""catchup_events":$catchupEvents,"catchup_ev_per_sec_wall":$catchupWallRate,""" +
-        s""""catchup_ev_per_sec_drain":$catchupDrainRate,"steady_ev_per_sec":$steadyRate,""" +
-        s""""sessions_emitted":$gotN,"exactly_once":true}"""
+      ListMap("sf" -> new java.math.BigDecimal(sf), "events" -> nEvents,
+        "state_rows_at_restart" -> aRows, "state_rows_final" -> bRows,
+        "phase_a_sec" -> aSec, "first_batch_cold_ms" -> aFirstMs,
+        "restart_catchup_sec" -> bSec, "first_batch_restored_ms" -> bFirstMs,
+        "catchup_events" -> catchupEvents,
+        "catchup_ev_per_sec_wall" -> catchupWallRate,
+        "catchup_ev_per_sec_drain" -> catchupDrainRate,
+        "steady_ev_per_sec" -> steadyRate, "sessions_emitted" -> gotN,
+        "exactly_once" -> true)
     }
 
-    println(s"""{"metric":"stream_recovery","provider":"rocksdb","cpus":$cpus,"users_x":$usersX,"runs":[${entries.mkString(",")}],"host_page_mbps":${graft.HostProbe.pageMBps()}}""")
+    println(graft.Json.write(ListMap("metric" -> "stream_recovery",
+      "provider" -> "rocksdb", "cpus" -> cpus, "users_x" -> usersX,
+      "runs" -> entries, "host_page_mbps" -> graft.HostProbe.pageMBps())))
     spark.stop()
   }
 }

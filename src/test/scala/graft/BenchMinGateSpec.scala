@@ -2,6 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import scala.jdk.CollectionConverters._
+
 /** Round-over-round FULL-SUITE regression gate on the isolated-draw
   * artifacts (r11 verdict item 6, extending SweepRatioGateSpec's
   * epoch-aware pattern to the whole Registry): compares the two newest
@@ -25,23 +27,19 @@ class BenchMinGateSpec extends AnyFunSuite {
       queries: Map[String, Double], path: String)
 
   private def parse(f: java.io.File): Option[Art] = {
-    val txt = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-    if (!txt.contains("\"suite_isolated_draws\"")) return None
+    val json = Json.readFile(f.getPath)
+    if (json.path("metric").asText != "suite_isolated_draws") return None
     val round = """BENCH_MIN_r(\d+)\.json""".r
       .findFirstMatchIn(f.getName).get.group(1).toInt
-    val totalMin = """"total_min_sec"\s*:\s*([0-9.eE+-]+)""".r
-      .findFirstMatchIn(txt).map(_.group(1).toDouble)
-      .getOrElse(fail(s"no total_min_sec in ${f.getName}"))
-    val probes = """"run_probes_mbps"\s*:\s*\[([^\]]*)\]""".r
-      .findFirstMatchIn(txt).map(_.group(1))
-      .getOrElse(fail(s"no run_probes_mbps in ${f.getName} — every draw " +
-        "must carry its epoch probe"))
-      .split(",").map(_.trim).filter(_.nonEmpty).map(_.toDouble).toSeq
-    val qObj = """"queries_min_sec"\s*:\s*\{([^}]*)\}""".r
-      .findFirstMatchIn(txt).map(_.group(1))
-      .getOrElse(fail(s"no queries_min_sec in ${f.getName}"))
-    val queries = """"([^"]+)"\s*:\s*([0-9.eE+-]+)""".r.findAllMatchIn(qObj)
-      .map(m => m.group(1) -> m.group(2).toDouble).toMap
+    def field(key: String, missing: String) =
+      Option(json.get(key)).getOrElse(fail(missing))
+    val totalMin = field("total_min_sec", s"no total_min_sec in ${f.getName}")
+      .asDouble
+    val probes = field("run_probes_mbps", s"no run_probes_mbps in ${f.getName} " +
+      "— every draw must carry its epoch probe").elements.asScala
+      .map(_.asDouble).toSeq
+    val queries = Json.numbers(
+      field("queries_min_sec", s"no queries_min_sec in ${f.getName}"))
     Some(Art(round, totalMin, probes, queries, f.getName))
   }
 

@@ -1,6 +1,9 @@
 package graft
 
+import com.fasterxml.jackson.databind.JsonNode
 import org.scalatest.funsuite.AnyFunSuite
+
+import scala.jdk.CollectionConverters._
 
 /** The 2× build gate, made draw-robust (r12 verdict task 1): the reference
   * publishes ~300 s for the SF10 `dbt build` (BASELINE.md / reference
@@ -37,51 +40,28 @@ class BuildMinGateSpec extends AnyFunSuite {
   private val BarSec = 600.0
   private val Artifact = "BENCH_SF10_REPLICA.json"
 
-  private def num(txt: String, key: String): Option[Double] =
-    (s""""$key"\\s*:\\s*([0-9.eE+-]+)""").r.findFirstMatchIn(txt)
-      .map(_.group(1).toDouble)
+  private def num(draw: JsonNode, key: String): Option[Double] =
+    Option(draw.get(key)).map(_.asDouble)
 
-  /** All current-round draw objects: entries of `runs_r13_code` carrying a
-    * per-model map. Brace-matching is done by scanning (the draw objects
-    * nest the `models` object). */
-  private def draws(txt: String): Seq[String] = {
-    val start = txt.indexOf("\"runs_r13_code\"")
-    assert(start >= 0, s"$Artifact lacks runs_r13_code — fold the r13 " +
+  /** All current-round draw objects: the entries of `runs_r13_code`. */
+  private def draws(json: JsonNode): Seq[JsonNode] = {
+    val runs = json.get("runs_r13_code")
+    assert(runs != null, s"$Artifact lacks runs_r13_code — fold the r13 " +
       "replica draws (with per-model seconds) into the artifact")
-    val arrStart = txt.indexOf('[', start)
-    var depth = 0
-    var i = arrStart
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    var objStart = -1
-    var done = false
-    while (!done) {
-      txt.charAt(i) match {
-        case '[' => depth += 1
-        case ']' => depth -= 1; if (depth == 0) done = true
-        case '{' => if (depth == 1) objStart = i; depth += 1
-        case '}' => depth -= 1; if (depth == 1) { out += txt.substring(objStart, i + 1) }
-        case _ =>
-      }
-      i += 1
-    }
-    out.toSeq
+    runs.elements.asScala.toSeq
   }
 
-  private def models(draw: String): Map[String, Double] = {
-    val m = (""""models"\s*:\s*\{([^}]*)\}""").r.findFirstMatchIn(draw)
-      .map(_.group(1)).getOrElse("")
-    (""""([a-z_0-9]+)"\s*:\s*([0-9.eE+-]+)""").r.findAllMatchIn(m)
-      .map(g => g.group(1) -> g.group(2).toDouble).toMap
-  }
+  private def models(draw: JsonNode): Map[String, Double] =
+    Option(draw.get("models")).map(Json.numbers).getOrElse(Map.empty)
 
   test("epoch-normalized SF10 build stays under 2x the reference (600 s)") {
     val f = new java.io.File(Artifact)
     assert(f.isFile, s"$Artifact missing")
-    val txt = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-    val ds = draws(txt).filter(d => models(d).nonEmpty && num(d, "value").isDefined)
+    val ds = draws(Json.readFile(Artifact))
+      .filter(d => models(d).nonEmpty && num(d, "value").isDefined)
     assert(ds.nonEmpty, "no r13 draws with per-model seconds in the artifact")
     ds.foreach { d =>
-      assert(d.contains("\"probe_series\""),
+      assert(d.has("probe_series"),
         "every draw must carry its in-run probe series (epoch evidence)")
     }
     val walls = ds.map(d => num(d, "value").get)

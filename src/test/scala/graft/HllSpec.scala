@@ -1,22 +1,15 @@
 package graft
 
 import graft.functions.Hll
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** HyperLogLog TypedImperativeAggregate: accuracy within the sketch's error
   * bound, partition-order invariance (register-max merge is associative and
   * commutative), grouped aggregation, and null handling. */
-class HllSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    Hll.register(s)
-    s
+class HllSpec extends SparkSpec {
+  override def beforeAll(): Unit = {
+    super.beforeAll()
+    Hll.register(spark)
   }
 
   test("estimate within the p=12 error bound (~1.6% RSE, assert 5%)") {

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Event-lake layout posture (Lake.writeTimePartitioned / Lake.compact):
   * at 100 TB the difference between scanning a day and scanning the corpus
@@ -10,14 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * ranges for row-group skipping — both are write-time decisions, so prove
   * the written layout actually delivers them, and that compaction preserves
   * the row multiset while collapsing the file count. */
-class LakeLayoutSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class LakeLayoutSpec extends SparkSpec {
   private def events = {
     import spark.implicits._
     spark.range(40000).select(

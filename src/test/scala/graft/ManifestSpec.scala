@@ -1,19 +1,8 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-
 /** Runner.manifest — the dbt `docs generate` twin: full dbt-surface model
   * census with resolved schemas, produced by analysis alone (zero jobs). */
-class ManifestSpec extends AnyFunSuite {
-  private lazy val spark = org.apache.spark.sql.SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  private lazy val ctx = Ctx(spark, "/root/testdata/sf0.001")
-
+class ManifestSpec extends SparkSpec {
   test("catalogs all 62 dbt-surface models with schemas, without scanning data") {
     // building the manifest (all model schemas) may only run METADATA jobs
     // (parquet footer/schema reads are 1-task jobs); any multi-task job

@@ -3,21 +3,12 @@ package graft
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 
 /** Physical-plan audit: the properties that make these plans survive a 100×
   * scale-up are asserted, not assumed — predicate pushdown reaches the
   * parquet scan, column pruning shrinks ReadSchema to what the query needs,
   * and snowflake dimension joins broadcast instead of shuffling the fact. */
-class PlanAuditSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-  private lazy val ctx = Ctx(spark, "/root/testdata/sf0.001")
-
+class PlanAuditSpec extends SparkSpec {
   private def scans(plan: SparkPlan): Seq[FileSourceScanExec] = {
     val expanded = plan.collect {
       case a: AdaptiveSparkPlanExec => a.executedPlan

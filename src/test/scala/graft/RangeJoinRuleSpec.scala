@@ -1,36 +1,27 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** RewriteRangeJoin optimizer rule: a bare point-in-interval theta join in
   * plain SQL must silently become a binned hash equi-join (same rows, no
   * BroadcastNestedLoopJoin), while joins with an equi conjunct, other join
   * types, and the kill-switch conf are left untouched. */
-class RangeJoinRuleSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // getOrCreate may hand back another suite's session (extensions conf
-    // ignored) — the lazy registration path must then kick in, and is
-    // itself part of what this suite exercises
-    graft.plans.AsOf.register(s)
-    s.range(400).select(
+class RangeJoinRuleSpec extends SparkSpec {
+  override def beforeAll(): Unit = {
+    super.beforeAll()
+    // the shared session carries no spark.sql.extensions: the lazy
+    // registration path is itself part of what this suite exercises
+    graft.plans.AsOf.register(spark)
+    spark.range(400).select(
       date_add(lit(java.sql.Date.valueOf("1995-01-01")),
         (col("id") * 13 % 700).cast("int")).as("day"),
       col("id").as("pid")).createOrReplaceTempView("rj_points")
-    s.range(250).select(
+    spark.range(250).select(
       date_add(lit(java.sql.Date.valueOf("1995-01-01")),
         (col("id") * 31 % 680).cast("int")).as("lo"),
       col("id").as("iid"))
       .withColumn("hi", date_add(col("lo"), (col("iid") % 40).cast("int")))
       .createOrReplaceTempView("rj_intervals")
-    s
   }
 
   private val sql =

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Runtime-filter posture proof (the companion of SkewSpec): when a fact
   * joins a dimension that carries a selective predicate, Spark's
@@ -14,18 +12,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * two flags are the tuning surface. Asserted, not assumed: the pushed
   * might_contain probe must appear on the fact side of the executed plan.
   */
-class RuntimeFilterSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
+class RuntimeFilterSpec extends SparkSpec {
+  override def beforeAll(): Unit = {
+    super.beforeAll()
+    spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
     // demo-scale thresholds: the default application-side floor is 10 GB
-    s.conf.set("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0")
-    s.conf.set("spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold", "100MB")
-    s
+    spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0")
+    spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold", "100MB")
   }
 
   test("selective dim filter injects a bloom probe on the fact side of a shuffle join") {

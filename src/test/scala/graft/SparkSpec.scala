@@ -4,17 +4,10 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session fixture: one local session per suite, UTC, small shuffle
-  * fan-out (test data is sf0.001). */
+/** Shared session fixture: the graft.Session factory session at local[4]
+  * (test data is sf0.001). */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName(getClass.getSimpleName)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Session(4)
 
   lazy val ctx: Ctx = Ctx(spark, "/root/testdata/sf0.001")
 

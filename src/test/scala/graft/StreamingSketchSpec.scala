@@ -2,24 +2,18 @@ package graft
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** The sketch aggregates as STREAMING monitors: TypedImperativeAggregate
   * state lives in the streaming aggregation's state store, so a live
   * quantile / heavy-hitter / cardinality readout over an unbounded stream
   * is the same one-liner as in batch — the standard observability pattern
   * at event-stream scale (no raw-value retention, bounded state). */
-class StreamingSketchSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.functions.KllSketch.register(s)
-    graft.functions.FreqItemsSketch.register(s)
-    graft.functions.Hll.register(s)
-    s
+class StreamingSketchSpec extends SparkSpec {
+  override def beforeAll(): Unit = {
+    super.beforeAll()
+    graft.functions.KllSketch.register(spark)
+    graft.functions.FreqItemsSketch.register(spark)
+    graft.functions.Hll.register(spark)
   }
 
   test("kll_sketch as a streaming quantile monitor (complete mode, multi-batch)") {

@@ -1,6 +1,9 @@
 package graft
 
+import com.fasterxml.jackson.databind.JsonNode
 import org.scalatest.funsuite.AnyFunSuite
+
+import scala.jdk.CollectionConverters._
 
 /** Regression gate over the committed pipe-sweep artifacts: every
   * LLM-pipeline leg measured at BOTH SF10 and SF100 must scale sublinearly
@@ -24,50 +27,42 @@ class SweepRatioGateSpec extends AnyFunSuite {
 
   private val MaxRatio = 8.0
 
-  private def readArtifact(path: String): String = {
+  private def readArtifact(path: String): JsonNode = {
     val f = new java.io.File(path)
     assert(f.isFile, s"sweep artifact missing: $path — rerun BenchScale " +
       "with SPARK_GRAFT_PIPE_SF and commit the JSON line")
-    new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+    Json.readFile(path)
   }
 
-  private def legSeconds(txt: String, path: String): Map[String, Double] = {
-    // our own single-line format: "queries" is a flat name->seconds object
-    val qObj = """"queries"\s*:\s*\{([^}]*)\}""".r
-      .findFirstMatchIn(txt).map(_.group(1))
-      .getOrElse(fail(s"no queries object in $path"))
-    """"([^"]+)"\s*:\s*([0-9.eE+-]+)""".r.findAllMatchIn(qObj)
-      .map(m => m.group(1) -> m.group(2).toDouble).toMap
-  }
+  private def legSeconds(json: JsonNode, path: String): Map[String, Double] =
+    Json.numbers(Option(json.get("queries"))
+      .getOrElse(fail(s"no queries object in $path")))
 
   /** The artifact's per-draw host probes — the epoch evidence. Every draw
     * MUST carry one: the gate compares two single-epoch snapshots, the
     * documented epoch swing (±80%, PERF_NOTES_r6) exceeds the worst leg's
     * headroom, and a probe-less refresh would make a drag-epoch artifact
     * indistinguishable from an engine regression. */
-  private def drawProbes(txt: String, path: String): Seq[Double] = {
-    val draws = """"draws"\s*:\s*\[(.*?)\]""".r
-      .findFirstMatchIn(txt).map(_.group(1))
-      .getOrElse(fail(s"no draws array in $path — refresh with the 3-draw " +
+  private def drawProbes(json: JsonNode, path: String): Seq[Double] = {
+    val draws = Option(json.get("draws")).getOrElse(
+      fail(s"no draws array in $path — refresh with the 3-draw " +
         "protocol (BenchScale pipeSweep x3 or tools/DrawSweep) and keep " +
-        "per-draw host_page_mbps"))
-    val entries = """\{[^}]*\}""".r.findAllIn(draws).toSeq
-    assert(entries.nonEmpty, s"empty draws array in $path")
-    entries.map { e =>
-      """"host_page_mbps"\s*:\s*([0-9.eE+-]+)""".r.findFirstMatchIn(e)
-        .map(_.group(1).toDouble)
+        "per-draw host_page_mbps")).elements.asScala.toSeq
+    assert(draws.nonEmpty, s"empty draws array in $path")
+    draws.map { d =>
+      Option(d.get("host_page_mbps")).map(_.asDouble)
         .getOrElse(fail(s"a draw in $path lacks host_page_mbps — every " +
           "draw must carry its epoch probe"))
     }
   }
 
   test("every shared pipe leg scales < 8x from SF10 to SF100 (10x data)") {
-    val txt10 = readArtifact("BENCH_PIPE_SF10.json")
-    val txt100 = readArtifact("BENCH_PIPE_SF100.json")
-    val sf10 = legSeconds(txt10, "BENCH_PIPE_SF10.json")
-    val sf100 = legSeconds(txt100, "BENCH_PIPE_SF100.json")
-    val p10 = drawProbes(txt10, "BENCH_PIPE_SF10.json")
-    val p100 = drawProbes(txt100, "BENCH_PIPE_SF100.json")
+    val json10 = readArtifact("BENCH_PIPE_SF10.json")
+    val json100 = readArtifact("BENCH_PIPE_SF100.json")
+    val sf10 = legSeconds(json10, "BENCH_PIPE_SF10.json")
+    val sf100 = legSeconds(json100, "BENCH_PIPE_SF100.json")
+    val p10 = drawProbes(json10, "BENCH_PIPE_SF10.json")
+    val p100 = drawProbes(json100, "BENCH_PIPE_SF100.json")
     val probePair = s"probes sf10=[${p10.mkString(",")}] " +
       s"sf100=[${p100.mkString(",")}] MB/s"
     info(probePair)

@@ -1,22 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** graft-synth DataSource V2: deterministic content independent of partition
   * layout, column pruning pushed into the generator, limit pushdown, and SF
   * scaling — the properties that make "bench at any SF with zero storage"
   * trustworthy.
   */
-class SynthSourceSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class SynthSourceSpec extends SparkSpec {
   private def synth(table: String, sf: Double, partitions: Int) =
     spark.read.format("graft-synth")
       .option("table", table).option("sf", sf.toString)

@@ -1,26 +1,14 @@
 package graft
 
 import graft.operators.TopK
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** The two-phase salted top-k must return EXACTLY the rows and ranks of
   * the single-window form — on a deliberately skewed key distribution
   * (one key holding 90% of rows), where the single window would be a
   * one-task bottleneck at scale. */
-class TopKSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
+class TopKSpec extends SparkSpec {
   test("identical rows and ranks to the single-window form under skew") {
     import spark.implicits._
     val df = spark.range(100000).select(

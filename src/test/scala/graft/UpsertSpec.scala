@@ -1,22 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Lake.upsert — keyed MERGE INTO over a date-partitioned lake: update-wins
   * semantics, inserts, and the two cost claims that make it viable at
   * 100 TB: untouched partitions are bit-identical afterwards (never
   * rewritten), and the read of the existing table is partition-pruned to
   * the touched dates. */
-class UpsertSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class UpsertSpec extends SparkSpec {
   private def base = spark.range(8000).select(
     col("id").as("k"),
     date_add(lit(java.sql.Date.valueOf("2024-03-01")),

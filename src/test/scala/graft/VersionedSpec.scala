@@ -1,20 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Versioned — the manifest-log table layer: snapshot isolation (readers
   * see only committed manifests), time travel, atomic partition
   * replacement, append/overwrite semantics, and vacuum GC. */
-class VersionedSpec extends AnyFunSuite {
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class VersionedSpec extends SparkSpec {
   private def df(tag: Long, n: Int = 100) = spark.range(n).select(
     col("id").as("k"), lit(tag).as("tag"),
     date_add(lit(java.sql.Date.valueOf("2024-05-01")),

@@ -1,24 +1,17 @@
 package graft
 
 import graft.functions.MortonCode
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Morton interleave expression + Z-ordered layout (Lake.writeZOrdered):
   * the codegen path must agree with the interpreted reference, and the
   * written layout must give every file a tight min/max span in BOTH
   * dimensions — the property parquet/Delta min-max skipping consumes —
   * where a linear sort is tight in one and useless in the other. */
-class ZOrderSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    MortonCode.register(s)
-    s
+class ZOrderSpec extends SparkSpec {
+  override def beforeAll(): Unit = {
+    super.beforeAll()
+    MortonCode.register(spark)
   }
 
   test("codegen agrees with the interpreted reference on edge and random values") {
